@@ -59,11 +59,3 @@ def ratings_column(key: Column, seed: int | str = 42, scale: float = 50.0) -> Co
 def orders_column(key: Column, seed: int | str = 42) -> Column:
     """Reference orders model (``generate_mock_data.py:39-40``): U{0..499}."""
     return hash_uniform_int(key, f"{seed}-ord", 0, 500)
-
-
-def price_ladder(base: Column, step: Column, n_sizes: int = 3) -> Column:
-    """Size-ladder price derivation (``generate_mock_data.py:67-79``):
-    ``[base + i*step for i in range(n)]`` as a pipe-joined string."""
-    seq = F.sequence(F.lit(0), F.lit(n_sizes - 1))
-    prices = F.transform(seq, lambda i: (base + i * step).cast("long").cast("string"))
-    return F.array_join(prices, "|")

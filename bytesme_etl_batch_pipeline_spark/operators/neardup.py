@@ -108,7 +108,9 @@ def blocked_shingle_commons(
     have ≥ 1 shingle by construction.
 
     Joining on the 64-bit hash is result-identical unless two DISTINCT
-    shingles of one block collide (p ≈ pairs²/2⁶⁵); verified exact against
+    shingles of one block collide (p ≈ m²/2⁶⁵ for m distinct shingles in
+    the block — the birthday bound); a collision can only overstate
+    ``n_common``, never drop a pair. Verified exact against
     the string-join formulation in tests and by the unchanged DuckDB
     oracles at every gated SF.
     """
@@ -152,6 +154,13 @@ def ngram_jaccard_pairs(
     compared); at web scale the block is an LSH bucket instead of a metadata
     column, but the verify math is identical. The shingle pass runs ONCE —
     see ``blocked_shingle_commons``.
+
+    Approximation: common shingles are counted by joining on
+    ``xxhash64(shingle)``, not the shingle string. If two distinct shingles
+    of one block share a hash, ``n_common`` and so ``jaccard`` are
+    overstated for the docs holding them. For m distinct shingles in a
+    block the chance of any collision is p ≈ m²/2⁶⁵ (about 3·10⁻⁸ at
+    m = 10⁶).
     """
     sizes_src, common = blocked_shingle_commons(df, id_col, text_col, block_col, n)
     sizes = sizes_src.select(F.col(id_col).alias("doc_a"), F.col("__sz").alias("size_a"))

@@ -250,7 +250,7 @@ def _pq_encode_pandas(
 
     # explicit functionType: this module has `from __future__ import
     # annotations`, which turns the hints into strings pandas_udf's
-    # inference can't resolve (same workaround as bench.py)
+    # type-hint inference can't resolve
     @pandas_udf("array<int>", PandasUDFType.SCALAR)
     def _encode(col):
         vals = list(col)

@@ -79,40 +79,19 @@ def _pin_width(df: DataFrame, *keys: str) -> DataFrame:
     return df.repartition(n, *[F.col(k) for k in keys])
 
 
-_LSH_EDGES_MEMO: dict = {}
-
-
 def _neardup_lsh_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash-LSH candidate pairs over documents — the artifact SHARED by
-    ``neardup_clusters`` and ``neardup_clusters_star`` (identical
-    parameters; VERDICT r3 item 3). Materialized once per (Spark app,
-    sf_dir) via ``localCheckpoint`` and memoized, so whichever CC variant
-    runs second skips the whole shingle→minhash→band cascade (~2 s of a
-    ~3 s query at sf0.1). Each query still stands alone: the first caller
-    in a fresh session computes the cascade itself.
+    """MinHash-LSH candidate pairs over documents — the edge list that
+    ``neardup_clusters`` and ``neardup_clusters_star`` both cluster
+    (identical parameters). Each query computes its own; the eager
+    ``localCheckpoint`` runs while the plan is built and keeps the
+    iterative connected-components rounds from replaying the
+    shingle→minhash→band cascade."""
+    from ..operators import neardup as N
 
-    Contract: the parquet under ``sf_dir`` is immutable for the life of
-    the app (true for the driver, bench, and test fixtures — testdata is
-    generated once). A session that regenerates the files must call
-    ``_LSH_EDGES_MEMO.clear()`` to invalidate. Evicted entries release
-    their checkpoint blocks via the ContextCleaner once the dropped
-    reference is GC'd; entries are keyed by applicationId so nothing
-    survives an app restart."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    got = _LSH_EDGES_MEMO.get(key)
-    if got is None:
-        from ..operators import neardup as N
-
-        d = load_table(spark, sf_dir, "documents")
-        got = N.minhash_lsh_pairs(
-            d, "doc_id", "text", num_hashes=4, bands=2, shingle_n=3
-        ).localCheckpoint(eager=True)
-        # drop artifacts of dead sessions (checkpoint RDDs die with the app)
-        for k in [k for k in _LSH_EDGES_MEMO if k[0] != key[0]]:
-            del _LSH_EDGES_MEMO[k]
-        _LSH_EDGES_MEMO[key] = got
-    return got
-
+    d = load_table(spark, sf_dir, "documents")
+    return N.minhash_lsh_pairs(
+        d, "doc_id", "text", num_hashes=4, bands=2, shingle_n=3
+    ).localCheckpoint(eager=True)
 
 
 # ---------------------------------------------------------------------------
@@ -8575,7 +8554,13 @@ def q_shingle_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     one document quotes or embeds the other — the subset-detection signal
     symmetric Jaccard misses. Same blocked pair machinery as
     ``ngram_jaccard_pairs`` (never all-pairs), both directions reported,
-    threshold 0.5 either way."""
+    threshold 0.5 either way.
+
+    Approximation: ``blocked_shingle_commons`` joins shingles on their
+    ``xxhash64``, not the string. A collision between two distinct
+    shingles of one source overstates ``n_common`` and both containments;
+    for m distinct shingles in a source its chance is p ≈ m²/2⁶⁵. The
+    DuckDB oracle joins the strings and agrees at every gated scale."""
     from ..operators.neardup import blocked_shingle_commons
 
     d = _cpu_spread(spark, sf_dir, "documents")
@@ -10010,11 +9995,11 @@ def q_media_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # non-splittable local scan — one 4.9 s stage on one of 32 cores in
     # the event-log profile. _cpu_spread parallelizes the Python boundary
     # (guide §4.1/§2.6), a no-op where scans split naturally. A pure-
-    # expression twin of the synthetic codec (multimodal.fake_phash_expr)
-    # was measured as the alternative: ~2.3x SLOWER per core than the
-    # pandas codec loop (HOF md5 chains run interpreted, not codegen) and
-    # a tie once both are spread — kept as a documented negative result
-    # with its bit-identity test, NOT landed.
+    # expression version of the synthetic codec (md5 chains in
+    # higher-order functions) measured ~2.3x SLOWER per core than the
+    # pandas codec loop, because those functions run interpreted, not
+    # codegen'd, and a tie once both are spread — so the codec stays in
+    # the Arrow stage.
     p = _cpu_spread(spark, sf_dir, "part")
     media = p.select(
         F.col("p_partkey").alias("media_id"),

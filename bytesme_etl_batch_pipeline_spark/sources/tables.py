@@ -67,11 +67,6 @@ def ensure_session_confs(spark: SparkSession) -> None:
 _SCAN_MEMO: dict[tuple[str, str, str], tuple[DataFrame, int | None]] = {}
 
 
-def _clear_scan_memo() -> None:
-    """Test hook: drop memoized scans (e.g. after rewriting a fixture)."""
-    _SCAN_MEMO.clear()
-
-
 def load_table(
     spark: SparkSession,
     sf_dir: str,

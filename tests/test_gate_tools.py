@@ -111,97 +111,6 @@ def test_merge_rejects_explicit_empty_expect(tmp_path: Path) -> None:
     assert "expected at least one argument" in proc.stderr
 
 
-# ---------------------------------------------------------------------------
-# bench_floor_compare: zero-floor handling, empty-shared guard, canary
-# normalization (ADVICE r8 + VERDICT r8 item 3)
-# ---------------------------------------------------------------------------
-
-
-def _write_detail(path: Path, queries: dict, canary: dict | None = None) -> None:
-    blob = {"queries": queries}
-    if canary is not None:
-        blob["canary"] = canary
-    path.write_text(json.dumps(blob))
-
-
-def _run_floor_compare(*argv: str) -> tuple[int, str, str]:
-    proc = subprocess.run(
-        [sys.executable, str(TOOLS / "bench_floor_compare.py"), *argv],
-        capture_output=True,
-        text=True,
-    )
-    return proc.returncode, proc.stdout, proc.stderr
-
-
-def test_floor_compare_zero_floor_not_silently_exempt(tmp_path: Path) -> None:
-    """A query with a 0.0 floor used to get ratio 1.0 — invisible to the
-    --flag regression check no matter how slow it got. It must now be
-    listed under zero_floor and flagged by ABSOLUTE time."""
-    f = tmp_path / "floor.json"
-    c = tmp_path / "pass.json"
-    _write_detail(f, {"q_ok": 1.0, "q_zero": 0.0})
-    _write_detail(c, {"q_ok": 1.0, "q_zero": 5.0})
-    rc, out, _ = _run_floor_compare(str(c), "--floors", str(f))
-    assert rc == 0
-    got = json.loads(out)
-    assert got["zero_floor"] == ["q_zero"]
-    assert "q_zero" in got["zero_floor_flagged_abs"]
-    assert "q_zero" not in got["flagged_over_threshold"]
-
-
-def test_floor_compare_output_names_its_input_files(tmp_path: Path) -> None:
-    """VERDICT r9 item 2: the r9-vs-r8 record used r8's best single pass
-    as the floor while reading like a min-of-3 comparison. The output
-    JSON must name exactly which files formed each side so the
-    convention is self-documenting."""
-    f = tmp_path / "floor.json"
-    c = tmp_path / "pass.json"
-    _write_detail(f, {"q": 1.0})
-    _write_detail(c, {"q": 1.1})
-    rc, out, _ = _run_floor_compare(str(c), "--floors", str(f))
-    assert rc == 0
-    got = json.loads(out)
-    assert got["pass_files"] == [str(c)]
-    assert got["floor_files"] == [str(f)]
-
-
-def test_floor_compare_empty_shared_is_an_error(tmp_path: Path) -> None:
-    f = tmp_path / "floor.json"
-    c = tmp_path / "pass.json"
-    _write_detail(f, {"old_q": 1.0})
-    _write_detail(c, {"new_q": 1.0})
-    rc, _, err = _run_floor_compare(str(c), "--floors", str(f))
-    assert rc == 2
-    assert "no shared queries" in err
-
-
-def test_floor_compare_canary_normalizes_uniform_host_shift(tmp_path: Path) -> None:
-    """VERDICT r8 item 3: identical engine code on a 2x-slower host must
-    read as host_factor 2.0 and normalized ratios ~1.0 — no flags."""
-    f = tmp_path / "floor.json"
-    c = tmp_path / "pass.json"
-    canary_fast = {"pre": {"a_x10": 1.0, "b_x10": 2.0},
-                   "post": {"a_x10": 1.0, "b_x10": 2.0}}
-    canary_slow = {"pre": {"a_x10": 2.0, "b_x10": 4.0},
-                   "post": {"a_x10": 2.0, "b_x10": 4.0}}
-    _write_detail(f, {"q1": 1.0, "q2": 3.0}, canary_fast)
-    _write_detail(c, {"q1": 2.0, "q2": 6.0}, canary_slow)
-    rc, out, _ = _run_floor_compare(str(c), "--floors", str(f))
-    assert rc == 0
-    got = json.loads(out)
-    assert got["host_factor"] == 2.0
-    assert got["total_ratio"] == 2.0          # raw still reported
-    assert got["normalized"]["total_ratio"] == 1.0
-    assert got["normalized"]["flagged_over_threshold"] == {}
-    # pre-canary floors (r6-r8 files) must degrade gracefully: raw only
-    f2 = tmp_path / "floor_nocanary.json"
-    _write_detail(f2, {"q1": 1.0, "q2": 3.0})
-    rc, out, _ = _run_floor_compare(str(c), "--floors", str(f2))
-    assert rc == 0
-    got = json.loads(out)
-    assert got["host_factor"] is None and "normalized" not in got
-
-
 def test_driver_gate_transient_classification() -> None:
     """ADVICE r8: classify oracle-open failures by DuckDB exception TYPE
     first — a permanent config error mentioning 'memory' must not burn
@@ -252,68 +161,3 @@ def test_driver_gate_ioexception_requires_alloc_shape() -> None:
         duckdb.IOException("corrupt parquet footer")
     )
 
-
-def test_floor_compare_per_probe_host_factor_and_host_basis(tmp_path: Path) -> None:
-    """ADVICE r9: (a) host_factor is the median of PER-PROBE ratios over
-    matching keys, not a pooled-sample median (mixed-magnitude pooling
-    biases when the probe set shifts); (b) engine-independent host_*
-    probes take precedence, so an engine-wide regression inflating the
-    engine probes cannot be divided out; (c) non-uniform probe ratios are
-    surfaced as canary_disagreement."""
-    f = tmp_path / "floor.json"
-    c = tmp_path / "pass.json"
-    # engine probes claim the host got 3x slower (an engine regression in
-    # disguise); the engine-independent host probes say the host is FLAT.
-    canary_floor = {
-        "pre": {"a_x10": 1.0, "host_matmul_x5": 1.0},
-        "post": {"a_x10": 1.0, "host_matmul_x5": 1.0},
-    }
-    canary_cand = {
-        "pre": {"a_x10": 3.0, "host_matmul_x5": 1.0},
-        "post": {"a_x10": 3.0, "host_matmul_x5": 1.0},
-    }
-    _write_detail(f, {"q1": 1.0}, canary_floor)
-    _write_detail(c, {"q1": 3.0}, canary_cand)
-    rc, out, _ = _run_floor_compare(str(c), "--floors", str(f))
-    assert rc == 0
-    got = json.loads(out)
-    # host basis wins: factor 1.0, so the 3x raw regression is NOT normalized away
-    assert got["host_factor_basis"] == "host"
-    assert got["host_factor"] == 1.0
-    assert got["normalized"]["total_ratio"] == 3.0
-    assert "q1" in got["normalized"]["flagged_over_threshold"]
-
-    # engine-basis fallback (old floors without host_* keys): per-probe
-    # median, not pooled — two probes of different magnitude, both 2x.
-    f2 = tmp_path / "floor2.json"
-    c2 = tmp_path / "pass2.json"
-    _write_detail(
-        f2,
-        {"q1": 1.0},
-        {"pre": {"a_x10": 0.1, "b_x10": 10.0}, "post": {"a_x10": 0.1, "b_x10": 10.0}},
-    )
-    _write_detail(
-        c2,
-        {"q1": 2.0},
-        {"pre": {"a_x10": 0.2, "b_x10": 20.0}, "post": {"a_x10": 0.2, "b_x10": 20.0}},
-    )
-    rc, out, _ = _run_floor_compare(str(c2), "--floors", str(f2))
-    got = json.loads(out)
-    assert got["host_factor_basis"] == "engine"
-    # pooled median would give 20/10 = 2.0 by luck here, but with a probe-set
-    # magnitude shift it biases; per-probe gives exactly 2.0 by construction
-    assert got["host_factor"] == 2.0
-    assert got["canary_disagreement"] is None
-    assert got["host_factor_suspicious"] is not None  # > 1.1 → surfaced
-
-    # disagreeing probes (one 1x, one 3x) → canary_disagreement set
-    c3 = tmp_path / "pass3.json"
-    _write_detail(
-        c3,
-        {"q1": 2.0},
-        {"pre": {"a_x10": 0.1, "b_x10": 30.0}, "post": {"a_x10": 0.1, "b_x10": 30.0}},
-    )
-    rc, out, _ = _run_floor_compare(str(c3), "--floors", str(f2))
-    got = json.loads(out)
-    assert got["canary_disagreement"] is not None
-    assert got["canary_disagreement"]["spread"] == 3.0

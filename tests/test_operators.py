@@ -738,8 +738,12 @@ def test_star_cc_empty_edges(spark):
 def test_ahash64_and_phash_perceptual_grouping(spark):
     """aHash semantics + end-to-end perceptual grouping: a one-pixel edit
     on a raw 8x8 grid keeps Hamming small and the pair is found by the
-    banded blocker; an unrelated image is not paired."""
+    banded blocker; an unrelated image is not paired. Also pins the
+    ``phash_media`` output contract: the caller's id column name and type
+    flow through, NULL-id / NULL-payload rows are dropped, and empty and
+    64-byte raw-grid payloads hash like the Python codec."""
     from bytesme_etl_batch_pipeline_spark.operators.multimodal import (
+        FakeCodec,
         ahash64,
         phash_media,
     )
@@ -761,6 +765,33 @@ def test_ahash64_and_phash_perceptual_grouping(spark):
     pairs = hamming_pairs_banded(ph, "media_id", "phash", max_hamming=3).collect()
     assert {(r.id_a, r.id_b) for r in pairs} == {(1, 2)}
     assert all(r.hamming <= 3 for r in pairs)
+
+    # id_col contract and dead-letter drops: a string id under the
+    # caller's name; NULL-id and NULL-payload rows never reach the codec
+    named = spark.createDataFrame(
+        [
+            ("grid", "image", base),
+            ("empty", "image", b""),
+            ("md5", "image", b"payload-7"),
+            ("no-payload", "image", None),
+            (None, "image", b"x"),
+        ],
+        "doc_key string, kind string, payload binary",
+    )
+    out = phash_media(named, id_col="doc_key")
+    assert out.columns == ["doc_key", "phash"]
+    assert dict(out.dtypes)["doc_key"] == "string"
+    got = {r.doc_key: r.phash for r in out.collect()}
+    codec = FakeCodec()
+
+    def fold(h: int) -> int:
+        return h - (1 << 64) if h >= (1 << 63) else h
+
+    assert got == {
+        "grid": fold(h),
+        "empty": fold(codec.pixels_hash(b"")),
+        "md5": fold(codec.pixels_hash(b"payload-7")),
+    }
 
 
 def test_hamming_pairs_banded_matches_bruteforce(spark):
@@ -798,34 +829,6 @@ def hamming_pairs_banded_import(df):
     )
 
     return hamming_pairs_banded(df, "id", "h", max_hamming=3)
-
-
-def test_phash_arrow_and_pandas_paths_identical(spark):
-    """The mapInArrow and mapInPandas codec paths must produce the same
-    hashes — callers choose by profile, never by semantics."""
-    from bytesme_etl_batch_pipeline_spark.operators.multimodal import (
-        phash_media,
-        phash_media_arrow,
-    )
-
-    rows = [(i, "image", f"payload-{i}".encode()) for i in range(40)]
-    media = spark.createDataFrame(rows, "media_id long, kind string, payload binary")
-    a = {r.media_id: r.phash for r in phash_media(media).collect()}
-    b = {r.media_id: r.phash for r in phash_media_arrow(media).collect()}
-    assert a == b and len(a) == 40
-    # the twins must also agree on the id_col contract: caller's column
-    # name AND type flow through to the output (ADVICE r3 fix applies to
-    # BOTH paths — the arrow path once hardcoded media_id/long)
-    named = media.withColumnRenamed("media_id", "doc_key").withColumn(
-        "doc_key", F.col("doc_key").cast("string")
-    )
-    pa_cols = phash_media(named, id_col="doc_key").columns
-    ar = phash_media_arrow(named, id_col="doc_key")
-    assert pa_cols == ar.columns == ["doc_key", "phash"]
-    assert dict(ar.dtypes)["doc_key"] == "string"
-    assert {r.doc_key: r.phash for r in ar.collect()} == {
-        str(k): v for k, v in b.items()
-    }
 
 
 def test_incremental_rollup_equals_one_shot(spark, tmp_path):
@@ -1119,46 +1122,6 @@ def test_boilerplate_removal_null_source_keeps_text(spark):
     assert got[1]["n_kept"] == 2 and got[1]["n_dropped"] == 0
     assert got[1]["clean_text"].startswith("unique words")
     assert got[2]["n_kept"] == 1
-
-
-def test_fake_phash_expr_matches_python_codec(spark):
-    """The pure-expression FakeCodec twin (r11: removes the Python boundary
-    from the media dedup query) must be BIT-IDENTICAL to
-    phash_media(FakeCodec) on every payload class: md5-expanded payloads of
-    assorted lengths, the raw-grid 64-byte branch, empty payloads, and the
-    NULL-id/NULL-payload dead-letter drops. Also pins single evaluation:
-    the 64-md5 pixel projection must appear once in the optimized plan,
-    not be inlined per bit term."""
-    import random
-
-    from bytesme_etl_batch_pipeline_spark.operators.multimodal import (
-        phash_media,
-        phash_media_expr,
-    )
-
-    rng = random.Random(11)
-    rows = []
-    for i in range(60):
-        n = rng.choice([0, 1, 5, 17, 63, 64, 65, 100])
-        rows.append((i, "image", bytes(rng.randrange(256) for _ in range(n))))
-    rows.append((100, "image", None))  # dead-letter: NULL payload
-    rows.append((None, "image", b"x"))  # dead-letter: NULL id
-    media = spark.createDataFrame(
-        rows, "media_id long, kind string, payload binary"
-    )
-    a = {r.media_id: r.phash for r in phash_media(media).collect()}
-    b = {r.media_id: r.phash for r in phash_media_expr(media).collect()}
-    assert a == b and len(a) == 60
-    # single-evaluation guard: one md5-per-pixel chain (64 calls) plus the
-    # seed hash — NOT 64x64 from Catalyst inlining the pixel array into
-    # each bit term of the mean comparison
-    plan = (
-        phash_media_expr(media)
-        ._jdf.queryExecution()
-        .optimizedPlan()
-        .toString()
-    )
-    assert plan.count("md5(") <= 130, plan.count("md5(")
 
 
 def test_blocked_shingle_commons_matches_string_join(spark):

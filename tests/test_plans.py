@@ -317,26 +317,3 @@ def test_catalog_counts_match_coverage_doc():
                 f"'{num} declared rows-only' vs live {len(rows_only)}"
             )
     assert not offenders, f"stale catalog tallies in COVERAGE.md: {offenders}"
-
-
-def test_neardup_lsh_edges_memoized_per_app_and_sfdir(spark, sf_dir):
-    """Both CC cluster queries must reuse ONE materialized LSH artifact
-    within a session (VERDICT r3 item 3), while a different sf_dir gets
-    its own; entries from other (dead) applications are evicted."""
-    from bytesme_etl_batch_pipeline_spark.plans import queries as Q
-
-    Q._LSH_EDGES_MEMO.clear()
-    a = Q._neardup_lsh_edges(spark, sf_dir)
-    b = Q._neardup_lsh_edges(spark, sf_dir)
-    assert a is b  # second caller skips the cascade entirely
-    app = spark.sparkContext.applicationId
-    assert set(Q._LSH_EDGES_MEMO) == {(app, sf_dir)}
-    # a stale entry from another app is evicted on the next compute
-    Q._LSH_EDGES_MEMO[("dead-app", sf_dir)] = a
-    c = Q._neardup_lsh_edges(spark, "/root/testdata/sf0.01")
-    assert c is not a
-    assert ("dead-app", sf_dir) not in Q._LSH_EDGES_MEMO
-    assert set(Q._LSH_EDGES_MEMO) == {
-        (app, sf_dir), (app, "/root/testdata/sf0.01")
-    }
-    Q._LSH_EDGES_MEMO.clear()

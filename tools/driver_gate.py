@@ -224,8 +224,8 @@ def main() -> int:
             flush=True,
         )
         # free the finished query's py4j handles so localCheckpoint blocks
-        # are reclaimed (same session-lifecycle leak bench.py guards
-        # against; at sf10 an unreleased multi-branch query's blocks add up)
+        # are reclaimed (at sf10 an unreleased multi-branch query's blocks
+        # add up across a session)
         gc.collect()
 
     print(
