@@ -153,3 +153,17 @@ def canonicalize_url(col: Column | str) -> Column:
         F.when(qs != "", F.concat(F.lit("?"), qs)).otherwise(F.lit("")),
     )
     return F.when(scheme == "", F.lower(u)).otherwise(canon)
+
+
+def sql_string(s: str) -> str:
+    """``s`` as a Spark SQL string literal for ``F.expr`` text: backslash
+    and single quote are backslash-escaped (the default
+    ``spark.sql.parser.escapedStringLiterals=false`` parser unescapes them
+    back), so regex escapes and quotes in data survive verbatim."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def sql_ident(name: str) -> str:
+    """``name`` as ONE backtick-quoted Spark SQL identifier (a top-level
+    column, not a dotted struct path); embedded backticks are doubled."""
+    return "`" + name.replace("`", "``") + "`"

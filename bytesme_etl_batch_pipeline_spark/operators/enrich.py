@@ -57,21 +57,21 @@ def enrich_products(
     """Full enrichment pass (reference ``generate_mock_data.py`` pipeline
     stage): per-category product codes, seeded discount/ratings/orders/stars,
     zero-price defaulting. One window shuffle (codes); everything else is
-    map-side."""
+    map-side, projected by ONE ``withColumns`` (each ``withColumn`` is a
+    py4j call plus a re-analysis of the whole plan)."""
     key = F.col(key_col)
     df = sequence_code(
         df, brand_col=brand_col, group_col=category_col, order_by=[key_col]
     )
-    return (
-        df.withColumn("product_discount_percentage", seeded.discount_column(key, seed))
-        .withColumn("product_total_ratings", seeded.ratings_column(key, seed))
-        .withColumn("product_total_orders", seeded.orders_column(key, seed))
-        .withColumn("product_overall_stars", stars_column(key))
-        .withColumn(
-            price_col,
-            F.when(
-                F.col(price_col).isNull() | (F.col(price_col) <= 0),
-                default_price(key, seed),
-            ).otherwise(F.col(price_col)),
-        )
+    price = F.col(price_col)
+    return df.withColumns(
+        {
+            "product_discount_percentage": seeded.discount_column(key, seed),
+            "product_total_ratings": seeded.ratings_column(key, seed),
+            "product_total_orders": seeded.orders_column(key, seed),
+            "product_overall_stars": stars_column(key),
+            price_col: F.when(
+                price.isNull() | (price <= 0), default_price(key, seed)
+            ).otherwise(price),
+        }
     )

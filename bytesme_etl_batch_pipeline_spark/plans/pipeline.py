@@ -19,6 +19,7 @@ import time
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 
 Stage = Callable[[DataFrame], DataFrame]
@@ -28,45 +29,39 @@ Stage = Callable[[DataFrame], DataFrame]
 STAGES: dict[str, Stage] = {}
 
 
-def _materialize_stage(spec: str) -> Stage | None:
-    """Built-in materialization barriers, usable by name in any stage list.
-
-    The stages themselves compose into ONE lazy DAG, which is right until a
-    stage's output feeds multiple downstream scans (the dedup family
-    re-reads its corpus 3-5×) — then the pipeline AUTHOR owns the
-    CPU-vs-storage tradeoff, declared in config rather than baked into
-    operators:
-
-    * ``persist`` / ``persist:memory`` / ``persist:disk`` — lazy
-      ``.persist`` at the matching StorageLevel; the first action
-      populates the cache, later branches reuse it. Spark evicts under
-      pressure and ContextCleaner frees it when the frame is dropped.
-    * ``checkpoint`` — eager ``localCheckpoint``: materializes NOW and
-      truncates lineage, the right barrier before iterative consumers
-      (CC loops) or when a long plan would otherwise replay per branch.
-      NB: ``localCheckpoint`` pins blocks at the RDD level for the life
-      of the SparkContext (``DataFrame.unpersist`` is a no-op on it —
-      ``ckpt.py``), so the runner tracks the pinned ids itself: a later
-      ``checkpoint`` stage in the same input's chain frees the superseded
-      one, the error path frees everything, and the FINAL checkpoint per
-      input (which the returned output reads lazily) is recorded in
-      ``PipelineReport.pinned_rdd_ids`` for ``report.free_barriers(spark)``
-      once the caller is done with the outputs. A long-lived session
-      re-running the pipeline must call it or leak one table-sized block
-      set per run.
-    """
-    from pyspark import StorageLevel
-
-    levels = {
-        "persist": StorageLevel.MEMORY_AND_DISK,
-        "persist:memory": StorageLevel.MEMORY_ONLY,
-        "persist:disk": StorageLevel.DISK_ONLY,
-    }
-    if spec in levels:
-        return lambda df: df.persist(levels[spec])
-    # "checkpoint" is handled inline by run_pipeline (it must thread the
-    # pinned-RDD bookkeeping); kept out of STAGES so the name still resolves.
-    return None
+# Built-in materialization barriers, usable by name in any stage list.
+#
+# The stages themselves compose into ONE lazy DAG, which is right until a
+# stage's output feeds multiple downstream scans (the dedup family re-reads
+# its corpus 3-5×) — then the pipeline AUTHOR owns the CPU-vs-storage
+# tradeoff, declared in config rather than baked into operators:
+#
+# * ``persist`` / ``persist:memory`` / ``persist:disk`` — lazy ``.persist``
+#   at the matching StorageLevel; the first action populates the cache,
+#   later branches reuse it. Spark evicts under pressure, but nothing frees
+#   the entry when the frame is dropped: the SQL CacheManager holds the plan
+#   for the life of the session. The runner records each persisted frame in
+#   ``PipelineReport.persisted``; ``report.free_barriers(spark)`` unpersists
+#   them, and the error path unpersists them at once.
+# * ``checkpoint`` — eager ``localCheckpoint``: materializes NOW and
+#   truncates lineage, the right barrier before iterative consumers (CC
+#   loops) or when a long plan would otherwise replay per branch.
+#   NB: ``localCheckpoint`` pins blocks at the RDD level for the life of the
+#   SparkContext (``DataFrame.unpersist`` is a no-op on it — ``ckpt.py``),
+#   so the runner tracks the pinned ids itself: a later ``checkpoint`` stage
+#   in the same input's chain frees the superseded one, the error path frees
+#   everything, and the FINAL checkpoint per input (which the returned
+#   output reads lazily) is recorded in ``PipelineReport.pinned_rdd_ids``
+#   for ``report.free_barriers(spark)`` once the caller is done with the
+#   outputs.
+#
+# A long-lived session re-running the pipeline must call ``free_barriers``
+# or leak one table-sized block set per barrier per run.
+_PERSIST_LEVELS = {
+    "persist": StorageLevel.MEMORY_AND_DISK,
+    "persist:memory": StorageLevel.MEMORY_ONLY,
+    "persist:disk": StorageLevel.DISK_ONLY,
+}
 
 
 def register_stage(name: str) -> Callable[[Stage], Stage]:
@@ -82,6 +77,7 @@ class StageResult:
     input_name: str
     status: str  # success | error
     stages: list[str]
+    #: rows in the output; None when a sink consumed it (or on error)
     rows_out: int | None
     seconds: float
     error: str | None = None
@@ -95,16 +91,24 @@ class PipelineReport:
     #: freed inside the run). Call ``free_barriers(spark)`` when done
     #: with the outputs.
     pinned_rdd_ids: dict[str, list[int]] = field(default_factory=dict)
+    #: input name -> frames its ``persist`` barriers cached (the SQL
+    #: CacheManager keeps them until unpersisted).
+    persisted: dict[str, list[DataFrame]] = field(default_factory=dict)
 
     def free_barriers(self, spark) -> None:
-        """Release every block set the run's ``checkpoint`` barriers left
-        pinned. Call ONLY after the returned output DataFrames will never
-        be touched again (their lineage was truncated to these blocks)."""
+        """Release every block set the run's barriers left behind: the
+        ``checkpoint`` pins and the ``persist`` cache entries. Call ONLY
+        after the returned output DataFrames will never be touched again
+        (their lineage was truncated to, or reads from, these blocks)."""
         from ..ckpt import free_checkpoint
 
         for ids in self.pinned_rdd_ids.values():
             free_checkpoint(spark, ids)
         self.pinned_rdd_ids.clear()
+        for frames in self.persisted.values():
+            for f in frames:
+                f.unpersist()
+        self.persisted.clear()
 
     @property
     def n_success(self) -> int:
@@ -132,8 +136,11 @@ def run_pipeline(
     (reference ``pipeline.py:94-111``): one input failing does not stop the
     rest; the report carries per-input status and timing.
 
-    Stages compose lazily — the only actions are the sink (or a count when
-    no sink is given, mirroring the reference's per-file summary).
+    Stages compose lazily. The only actions are the sink, the eager
+    ``checkpoint`` barriers and, with no sink, the row count of the
+    per-file summary: when the last stage is a ``checkpoint`` its own job
+    counts the rows (an ``Observation`` on the frame it materializes);
+    otherwise ``rows_out`` costs one ``count()`` of the output.
 
     ``on_error(input_name, message)`` is the injectable alert hook — the
     engine twin of the reference's Discord-webhook-on-error
@@ -141,17 +148,26 @@ def run_pipeline(
     tests inject a recorder; a notifier that itself raises is swallowed so
     alerting failures can never mask the original error.
     """
+    from pyspark.sql import Observation
+    from pyspark.sql import functions as F
+
     from ..ckpt import free_checkpoint, tracked_local_checkpoint
 
     report = PipelineReport()
     outputs: dict[str, DataFrame] = {}
+    last = len(stage_names) - 1
     for name, df in inputs.items():
         t0 = time.perf_counter()
         held: list[int] = []  # blocks pinned by this input's barriers
+        persisted: list[DataFrame] = []  # frames cached by its persist barriers
         try:
             out = df
-            for sname in stage_names:
+            rows_obs = None
+            for i, sname in enumerate(stage_names):
                 if sname == "checkpoint":
+                    if sink is None and i == last:
+                        rows_obs = Observation()
+                        out = out.observe(rows_obs, F.expr("count(1) AS rows"))
                     # tracked form: a later barrier supersedes this one's
                     # blocks (the chain is linear), so free them then —
                     # bare localCheckpoint would pin one table-sized block
@@ -161,24 +177,35 @@ def run_pipeline(
                         free_checkpoint(out.sparkSession, held)
                     held = new_ids
                     continue
-                stage = STAGES.get(sname) or _materialize_stage(sname)
+                if sname in _PERSIST_LEVELS:
+                    out = out.persist(_PERSIST_LEVELS[sname])
+                    persisted.append(out)
+                    continue
+                stage = STAGES.get(sname)
                 if stage is None:
                     raise KeyError(f"unknown stage: {sname!r}")
                 out = stage(out)
             if sink is not None:
                 sink(name, out)
                 rows = None
+            elif rows_obs is not None:
+                rows = rows_obs.get["rows"]
             else:
                 rows = out.count()
             outputs[name] = out
             if held:  # final barrier: the returned output reads it lazily
                 report.pinned_rdd_ids[name] = held
+            if persisted:
+                report.persisted[name] = persisted
             report.results.append(
                 StageResult(name, "success", stage_names, rows, time.perf_counter() - t0)
             )
         except Exception as e:  # per-input isolation — error is data, not crash
-            if held:  # no output escapes this input — its blocks are dead
+            # no output escapes this input — its barriers' blocks are dead
+            if held:
                 free_checkpoint(df.sparkSession, held)
+            for f in persisted:
+                f.unpersist()
             report.results.append(
                 StageResult(
                     name, "error", stage_names, None, time.perf_counter() - t0, str(e)

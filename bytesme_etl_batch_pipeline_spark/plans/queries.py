@@ -663,7 +663,7 @@ _PART_SPECIALS = [("medium", "Mid-range")]
 def q_rule_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C1: the reference's 3-tier category cascade
     (``standardize_categories.py:38-72``) as rules-as-data compiled to one
-    ordered when-chain — special-case substring, exact raw match, then
+    ordered SQL CASE — special-case substring, exact raw match, then
     name-regex fallback, first hit wins in rule order. Uses the relaxed
     bare-substring tier-1 (TPC-H p_type is never pipe-joined); the
     reference-faithful multi-valued guard is exercised by the Vietnamese

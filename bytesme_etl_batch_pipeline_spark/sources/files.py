@@ -589,9 +589,10 @@ def merge_upsert_parquet(
     Merge semantics are ``operators/cdc``-style latest-change-wins,
     expressed as one window over the union — a keyed shuffle, no driver
     state. Missing base (first load) bootstraps from the updates alone.
-    Returns the merged row count.
+    Returns the number of rows written to the merged table, counted by an
+    ``Observation`` inside the write job itself (no re-read of the output).
     """
-    from pyspark.sql import Window
+    from pyspark.sql import Observation, Window
     from pyspark.sql import functions as _F
 
     staging = protocol_sibling(base_path, "staging")
@@ -624,7 +625,11 @@ def merge_upsert_parquet(
     )
     if delete_col is not None:
         merged = merged.filter(~_F.coalesce(_F.col(delete_col), _F.lit(False)))
-    merged.write.mode("overwrite").parquet(staging)
-    n = spark.read.parquet(staging).count()
+    # observed AFTER the delete filter, so it counts the rows written; it
+    # sits past the window's exchange, in the write's result stage, where
+    # Spark applies each partition's metrics once even if a task retries
+    written = Observation()
+    merged.observe(written, _F.expr("count(1) AS rows")).write.mode("overwrite").parquet(staging)
+    n = written.get["rows"]
     publish_staging_swap(base_path)
     return n

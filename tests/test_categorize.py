@@ -9,10 +9,14 @@ from __future__ import annotations
 
 import csv
 import os
+import re
+
+import pytest
 
 from bytesme_etl_batch_pipeline_spark.operators.categorize import (
     BYTESME_RULES,
     BYTESME_SPECIAL_CASES,
+    build_rule_cascade,
     standardize_categories,
 )
 
@@ -153,3 +157,85 @@ def test_golden_raw_to_staging_snapshots(spark):
         "unexpected": {k: v for k, v in mismatches.items() if KNOWN_STAGING_DRIFT.get(k) != v},
         "now_matching": sorted(set(KNOWN_STAGING_DRIFT) - set(mismatches)),
     }
+
+
+# Rules whose variants, needles, labels and column names all need quoting or
+# escaping when compiled into SQL text.
+ESCAPE_RULES = [
+    ("Quote's", ["O'Brien's"]),
+    ("Back\\slash", ["c:\\temp"]),
+    ("Percent", ["50%_off"]),
+    ("Dot", ["a.b"]),
+    ("Paren", ["(new)"]),
+    ("Pipe", ["x|y"]),
+    ("Star", ["2*3"]),
+    ("Viet", ["Đồ Uống", "Trà Sữa"]),
+]
+ESCAPE_SPECIALS = [("O'K\\", "Special 'one'")]
+ESCAPE_ROWS = [
+    # (name, raw)
+    ("zzz", "O'BRIEN'S"),
+    ("zzz", "c:\\TEMP"),
+    ("zzz", "50%_off"),
+    ("zzz", "50xyoff"),
+    ("buy a.b now", "none"),
+    ("buy axb now", "none"),
+    ("get (NEW) deal", "none"),
+    ("get new deal", "none"),
+    ("x|y combo", "none"),
+    ("x alone", "none"),
+    ("2*3 pack", "none"),
+    ("223 pack", "none"),
+    ("ĐỒ UỐNG lạnh", "none"),
+    ("TRÀ SỮA trân châu", "none"),
+    ("copy c:\\temp here", "none"),
+    ("o'brien's pie", "none"),
+    ("50%_OFF today", "none"),
+    ("50a off today", "none"),
+    ("zzz", "a|o'k\\ x"),
+    ("zzz", "o'k\\ x"),
+    ("  A.B  ", None),
+    (None, None),
+]
+
+
+def _python_cascade(name, raw, rules, specials, default, guard):
+    """The 3-tier cascade in plain Python: str.lower, in, re.search."""
+    r = raw.strip(" ").lower() if raw is not None else None
+    n = name.strip(" ").lower() if name is not None else None
+    if r is not None:
+        for needle, cat in specials:
+            if (not guard or "|" in r) and needle.lower() in r:
+                return cat
+        for cat, variants in rules:
+            if r in [v.lower() for v in variants]:
+                return cat
+    if n is not None:
+        for cat, variants in rules:
+            if re.search("|".join(re.escape(v.lower()) for v in variants), n):
+                return cat
+    return default
+
+
+@pytest.mark.parametrize("guard", [True, False])
+def test_cascade_escapes_sql_and_regex_specials(spark, guard):
+    """The cascade is compiled into SQL text: quotes, backslashes, LIKE and
+    regex metacharacters, upper-case non-ASCII variants and column names
+    that need backticks must all behave as the plain-Python cascade."""
+    name_col, raw_col, default = "product name", "raw`cat.x", "Other's \\"
+    df = spark.createDataFrame(
+        [(i, n, r) for i, (n, r) in enumerate(ESCAPE_ROWS)],
+        f"i int, `{name_col}` string, `{raw_col.replace('`', '``')}` string",
+    )
+    cascade = build_rule_cascade(
+        name_col, raw_col, ESCAPE_RULES, ESCAPE_SPECIALS, default,
+        special_multivalued_guard=guard,
+    )
+    got = {r["i"]: r["c"] for r in df.select("i", cascade.alias("c")).collect()}
+    want = {
+        i: _python_cascade(n, r, ESCAPE_RULES, ESCAPE_SPECIALS, default, guard)
+        for i, (n, r) in enumerate(ESCAPE_ROWS)
+    }
+    assert got == want
+    # the oracle is not vacuous: every label and the default occur
+    assert set(want.values()) == {c for c, _ in ESCAPE_RULES} | {"Special 'one'", default}

@@ -1169,3 +1169,37 @@ def test_blocked_shingle_commons_matches_string_join(spark):
     # docs 1/8 are exact dups in one block; 4 is blocked away from them
     assert got_common[(1, 8)] == got_sizes[1]
     assert (1, 4) not in got_common
+
+
+def test_run_pipeline_persist_barriers_freed(spark):
+    """The SQL CacheManager holds a persisted plan until it is unpersisted
+    (dropping the frame frees nothing), so the runner records its persist
+    barriers: free_barriers unpersists them once the caller is done, and
+    an input that fails after one unpersists it at once."""
+    sc = spark.sparkContext
+    STAGES["plus1"] = lambda df: df.withColumn("v", F.col("v") + 1)
+
+    @register_stage("boom4")
+    def boom4(df):
+        raise RuntimeError("post-persist failure")
+
+    try:
+        src = spark.createDataFrame([(i,) for i in range(6)], ["v"])
+        before = set(sc._jsc.getPersistentRDDs().keySet().toArray())
+        outputs, report = run_pipeline({"a": src}, ["plus1", "persist"])
+        out = outputs["a"]
+        assert report.results[0].rows_out == 6  # the count populated the cache
+        assert out.storageLevel.useMemory
+        assert set(sc._jsc.getPersistentRDDs().keySet().toArray()) - before
+
+        report.free_barriers(spark)
+        assert not out.storageLevel.useMemory and not out.storageLevel.useDisk
+        assert set(sc._jsc.getPersistentRDDs().keySet().toArray()) - before == set()
+        assert report.persisted == {}
+
+        failed, report2 = run_pipeline({"b": src}, ["plus1", "persist:disk", "boom4"])
+        assert report2.n_error == 1 and report2.persisted == {}
+        assert not src.withColumn("v", F.col("v") + 1).storageLevel.useDisk
+    finally:
+        STAGES.pop("plus1", None)
+        STAGES.pop("boom4", None)
